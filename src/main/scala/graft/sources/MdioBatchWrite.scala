@@ -472,18 +472,18 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
     if (bytes == null) null else ChunkCodec.decompress(bytes, m.compressor, rawSize)
   }
 
-  private def seedD(v: Int, cid: Long, fill: Double, width: Int): Array[Double] = {
+  private def seedD(v: Int, cid: Long, width: Int): Array[Double] = {
     val m = vars(v)._2
     val raw = existingRaw(v, cid, chunkLen * m.elemSize)
-    if (raw == null) Array.fill(chunkLen * width)(fill)
+    if (raw == null) { val fill = m.fillDouble; Array.fill(chunkLen * width)(fill) }
     else if (width == 2) ChunkCodec.decodeComplex(raw, m.dtype)
     else ChunkCodec.decodeDoubles(raw, m.dtype)
   }
 
-  private def seedL(v: Int, cid: Long, longFill: Long): Array[Long] = {
+  private def seedL(v: Int, cid: Long): Array[Long] = {
     val m = vars(v)._2
     val raw = existingRaw(v, cid, chunkLen * m.elemSize)
-    if (raw == null) Array.fill(chunkLen)(longFill)
+    if (raw == null) { val fill = m.fillLong; Array.fill(chunkLen)(fill) }
     else ChunkCodec.decodeLongs(raw, m.dtype)
   }
 
@@ -535,16 +535,15 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
       require(m.shard.isEmpty || (m.fields.isEmpty && !MdioPartitionReader.isComplex(m.dtype)),
         s"sharded write supports float/integral dtypes, not '${m.dtype}' " +
           s"(variable '${vars(v)._1}')")
-      val fill = m.fillValue.getOrElse(Double.NaN)
       kindOf(m) match {
         case 'f' =>
-          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, fill, 1))
+          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, 1))
           buf(off.toInt) = schema.fields(varIdx(v)).dataType match {
             case FloatType => row.getFloat(varIdx(v)).toDouble
             case _ => row.getDouble(varIdx(v))
           }
         case 'c' =>
-          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, fill, 2))
+          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, 2))
           val s = row.getStruct(varIdx(v), 2)
           val isF4 = !m.dtype.endsWith("16")
           buf(off.toInt * 2) = if (isF4) s.getFloat(0).toDouble else s.getDouble(0)
@@ -591,10 +590,7 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
             k += 1
           }
         case _ =>
-          val isU64 = m.dtype.charAt(m.dtype.length - 2) == 'u' && m.dtype.endsWith("8")
-          val longFill = if (isU64 && fill > 9.2e18) -1L
-                         else if (fill.isNaN) 0L else fill.toLong
-          val buf = bufL(v).getOrElseUpdate(cid, seedL(v, cid, longFill))
+          val buf = bufL(v).getOrElseUpdate(cid, seedL(v, cid))
           buf(off.toInt) = schema.fields(varIdx(v)).dataType match {
             case LongType => row.getLong(varIdx(v))
             case IntegerType => row.getInt(varIdx(v)).toLong

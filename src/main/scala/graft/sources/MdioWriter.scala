@@ -637,7 +637,6 @@ object MdioWriter {
     val compressor = meta.compressor
     val bloscSettings = meta.blosc
     val elemSz = meta.elemSize
-    val fill = meta.fillValue.getOrElse(Double.NaN)
     val pathStr = path
     val rank = dims.size
 
@@ -682,9 +681,8 @@ object MdioWriter {
     val isComplex = kindChar == 'c'
     val valueWidth = if (isComplex) 2 else 1
     val isFloat = kindChar == 'f' || isComplex
-    val longFill: Long =
-      if (isU64 && fill > 9.2e18) -1L // u64 max fill, two's complement
-      else if (fill.isNaN) 0L else fill.toLong
+    val fill = if (isFloat) meta.fillDouble else Double.NaN
+    val longFill = if (isFloat) 0L else meta.fillLong
 
     val nChunks = grid.product
     val parts = math.min(nChunks, math.max(spark.sparkContext.defaultParallelism.toLong, 1L)).toInt
@@ -1135,7 +1133,6 @@ object MdioWriter {
     val compressor = meta.compressor
     val bloscSettings = meta.blosc
     val elemSz = meta.elemSize
-    val fill = meta.fillValue.getOrElse(Double.NaN)
     val metaB = meta
     val pathStr = path
     val rank = dims.size
@@ -1143,10 +1140,9 @@ object MdioWriter {
     require(kindChar != 'c' && metaB.fields.isEmpty,
       s"sharded write supports float/integral dtypes, not '$dtype'")
     val isFloat = kindChar == 'f'
+    val fill = if (isFloat) meta.fillDouble else Double.NaN
+    val longFill = if (isFloat) 0L else meta.fillLong
     val isU64 = kindChar == 'u' && dtype.endsWith("8")
-    val longFill: Long =
-      if (isU64 && fill > 9.2e18) -1L
-      else if (fill.isNaN) 0L else fill.toLong
 
     val shardId = dims.zipWithIndex.map { case (d, i) =>
       expr(s"CAST(`$d` AS BIGINT) div ${shardShape(i)}") *

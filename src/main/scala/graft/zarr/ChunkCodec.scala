@@ -22,8 +22,12 @@ import java.util.zip.{Deflater, GZIPInputStream, Inflater}
   *    (mdio/dataset_factory.h:288-367); [[Blosc]] carries those settings
   *    through the write path.
   *
-  * Values travel as JVM doubles/longs at the connector boundary; the typed
-  * read/write keeps unsigned widening consistent (SURVEY §1.2).
+  * Writes hand values in as JVM doubles/longs ([[encodeDoubles]],
+  * [[encodeLongs]]). Reads hand the connector the decompressed
+  * little-endian bytes: it copies them straight into column vectors where
+  * the Spark type has the stored width, and widens the rest through the
+  * typed decoders below. Both directions keep unsigned widening consistent
+  * (SURVEY §1.2).
   */
 object ChunkCodec {
 

@@ -48,6 +48,27 @@ object ZarrMeta {
       case Some(fs) => fs.map(f => ChunkCodec.elemSize(f._2)).sum
       case None => ChunkCodec.elemSize(dtype)
     }
+    // An unwritten cell (its chunk is absent) reads as the fill below, and
+    // a read-modify-write seeds its buffer with the same value, so a cell
+    // reads the same before and after a neighbour materialises its chunk.
+    // Each fill is passed through the dtype's encoding, so it equals what
+    // a seeded, written and re-read chunk decodes to. Record dtypes fill
+    // with zero bytes on both sides and need no rule here.
+    /** Fill of a float or complex (per component) cell: `fill_value`, NaN
+      * when it is null. */
+    def fillDouble: Double = {
+      val elem = if (!dtype.contains('c')) dtype else if (dtype.endsWith("16")) "<f8" else "<f4"
+      ChunkCodec.decodeDoubles(
+        ChunkCodec.encodeDoubles(Array(fillValue.getOrElse(Double.NaN)), elem), elem)(0)
+    }
+    /** Fill of an integral or bool cell: `fill_value`, 0 when it is null.
+      * A uint64 fill past 9.2e18 is the type max (two's complement -1): a
+      * double cannot hold 2^64-1 exactly. */
+    def fillLong: Long = {
+      val f = fillValue.getOrElse(0.0)
+      val l = if (dtype.endsWith("u8") && f > 9.2e18) -1L else if (f.isNaN) 0L else f.toLong
+      ChunkCodec.decodeLongs(ChunkCodec.encodeLongs(Array(l), dtype), dtype)(0)
+    }
     /** Inner chunks per shard along each dimension (1s when unsharded). */
     def innerPerShard: Seq[Long] =
       shard.map(_.zip(chunks).map { case (s, c) => s / c }).getOrElse(Seq.fill(rank)(1L))
